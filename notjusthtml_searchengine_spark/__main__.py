@@ -62,7 +62,12 @@ def main() -> None:
         "--face-detector", default="none",
         help="face detector plugin: none | fake | <model name>",
     )
-    ap.add_argument("--buckets", type=int, default=256)
+    ap.add_argument(
+        "--buckets", type=int, default=None,
+        help="state bucket count; default: derived from the state's size "
+        "at bootstrap and at each compaction round, pinned in the round "
+        "manifest",
+    )
     ap.add_argument("--master", default=None)
     # query mode (consumer catalog over an existing state dir):
     ap.add_argument("--search-keyword", default=None, metavar="TERM",

@@ -58,8 +58,6 @@ def extract_keywords(node: Node, multiplier: int = 1) -> list[tuple[int, str]]:
         if len(ch) == 1:
             c0 = ch[0]
             if c0.type == TEXT:
-                if c0.data == "":
-                    return []
                 m = get_mult(node.data, multiplier)
                 m = get_mult(c0.data, m)
                 return [(m, go_clean(c0.data))]

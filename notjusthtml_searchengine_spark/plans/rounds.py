@@ -21,6 +21,7 @@ still enter the seen set).
 
 from __future__ import annotations
 
+import math
 import os
 import time
 from dataclasses import dataclass, field
@@ -35,6 +36,11 @@ from pyspark.sql import functions as F
 # ~5x (measured). Serialized blocks cost a little CPU on re-read and
 # save the round.
 _CACHE = StorageLevel.MEMORY_AND_DISK
+
+# Estimated bytes per seen/frontier row (url + host chars and the
+# fixed-width columns): the bucket-count derivation sizes a state of
+# n rows as n × this.
+STATE_ROW_BYTES = 128
 
 from .. import schemas
 from ..extract.udfs import extract_with_meta
@@ -64,8 +70,21 @@ class CrawlConfig:
     # error rows.
     fetch_robots_txt: bool = False
     bloom_prefilter: bool = True
-    n_buckets: int = 32
-    shard_bits: int = 1 << 20  # per-shard bloom bits (scale: size per bucket)
+    # Bucket count of the seen/frontier/sites-keys state tables. None
+    # derives it from the state's size with the shuffle-sizing volume
+    # rule (volume_partitions below): from the seed count at bootstrap,
+    # and from the footer row counts of the seen and frontier parts at
+    # each compaction round. An int fixes it. Either way the count in
+    # force is pinned in the round manifest, every bucketed read and
+    # write and the bloom use the manifest's value, and it changes only
+    # at a compaction round, which rewrites every bucketed table (and
+    # rebuilds the bloom) at the new count.
+    n_buckets: int | None = None
+    # Bloom bits per bucket shard. Total capacity is n_buckets ×
+    # shard_bits, about 10 bits per url for ~1% false positives. A
+    # false positive costs one row in the exact anti-join; it never
+    # drops a url.
+    shard_bits: int = 1 << 20
     salt: int = 8  # hot-host salting fan-out before extraction
     media: bool = True
     # face detector plugged into media/faces.py: "none" mirrors the
@@ -131,6 +150,31 @@ class CrawlConfig:
     extra: dict = field(default_factory=dict)
 
 
+def volume_partitions(est_bytes: float, base: int, cfg: CrawlConfig) -> int:
+    """Partition count for ``est_bytes`` of data on a scheduler that
+    runs ``base`` tasks at once. Sizes both the per-round shuffles and
+    the state's bucket count.
+
+    Three rules compose (each measured, see CrawlConfig fields):
+    1. volume / target_partition_bytes is the base count;
+    2. it is capped at max_task_waves full waves of the scheduler
+       (per-task Python-stage overhead beats partition-size relief
+       once partitions are spill-safe), but never capped so hard
+       that partitions exceed spill_guard_partition_bytes — beyond
+       the guard the count rises with volume again;
+    3. the result is quantized UP to a multiple of the scheduler's
+       parallelism: a count like 12 on an 8-thread scheduler runs
+       a second task wave half-empty (4 busy / 4 idle) while a
+       2-thread scheduler is unaffected — exactly the asymmetry
+       that collapsed N→4N scaling to 0.391 in BENCH_r03.
+    Never shrinks below the parallelism; capped by
+    max_shuffle_partitions."""
+    by_target = max(1, math.ceil(est_bytes / cfg.target_partition_bytes))
+    by_guard = max(1, math.ceil(est_bytes / cfg.spill_guard_partition_bytes))
+    raw = max(min(by_target, cfg.max_task_waves * base), by_guard)
+    return min(cfg.max_shuffle_partitions, math.ceil(raw / base) * base)
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -143,6 +187,7 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.cfg = cfg
+        self.seeds_path = seeds_path
         # State-backend dispatch (cfg.extra["state_backend"]): the
         # Iceberg backend fails LOUDLY at construction when the runtime
         # jars are absent (IcebergUnavailable) instead of mid-crawl; it
@@ -157,7 +202,7 @@ class CrawlEngine:
             from .iceberg_state import IcebergCrawlState
 
             self.iceberg = IcebergCrawlState(spark, cfg.state_dir)
-            self.iceberg.create_state_tables(cfg.n_buckets)
+            self.iceberg.create_state_tables(self._bootstrap_buckets())
             # PROVISION-ONLY today (ADVICE r4): the tables, MERGE/expire
             # SQL and round-tag surface are created and unit-pinned, but
             # the round loop below still reads/writes frontier/seen/
@@ -178,7 +223,6 @@ class CrawlEngine:
             self.iceberg = None
         self.state = CrawlState(cfg.state_dir)
         self.pages = spark.read.schema(schemas.PAGES).parquet(pages_path)
-        self.seeds_path = seeds_path
         self.flagged = ops.load_flagged_words(spark, flagged_path)
         # config-size list: collected ONCE at engine init so the rating
         # stage can unroll into a codegen expression (see
@@ -204,6 +248,7 @@ class CrawlEngine:
         link is re-enqueued and re-fetched once, faithfully.
         """
         r = 0
+        n_buckets = self._bootstrap_buckets()
         seeds = ops.load_seeds(self.spark, self.seeds_path)
         frontier = (
             seeds.withColumn("host", host_expr("url_norm"))
@@ -236,7 +281,7 @@ class CrawlEngine:
                 .withColumn("url_hash", F.xxhash64("url_norm"))
             )
             frontier = frontier.unionByName(rob)
-        self.state.write_bucketed(frontier, r, "frontier_full", self.cfg.n_buckets)
+        self.state.write_bucketed(frontier, r, "frontier_full", n_buckets)
         seen0 = self.spark.createDataFrame([], schemas.SEEN)
         if self.cfg.fetch_robots_txt:
             # the bootstrap robots rows enter seen immediately (unlike
@@ -250,10 +295,10 @@ class CrawlEngine:
                     "url_norm", "url_hash", F.lit(0).alias("round_seen")
                 )
             )
-        self.state.write_bucketed(seen0, r, "seen_full", self.cfg.n_buckets)
+        self.state.write_bucketed(seen0, r, "seen_full", n_buckets)
         if self.cfg.bloom_prefilter:
             shards = bloom_ops.build_shards(
-                seeds.limit(0), self.cfg.n_buckets, self.cfg.shard_bits
+                seeds.limit(0), n_buckets, self.cfg.shard_bits
             )
             self._write(shards, r, "bloom")
         self.state.commit_round(
@@ -265,7 +310,7 @@ class CrawlEngine:
                 "sites_parts": [],
                 "bloom": f"r{r:05d}/bloom" if self.cfg.bloom_prefilter else None,
                 "pages_fetched": 0,
-                "n_buckets": self.cfg.n_buckets,
+                "n_buckets": n_buckets,
             },
         )
 
@@ -284,8 +329,12 @@ class CrawlEngine:
         ]
 
     def _read_seen(self, parts: list[str], n_buckets: int | None = None) -> DataFrame:
-        """Union view of all seen parts (membership queries/tests)."""
-        dfs = self._seen_parts(parts, n_buckets or self.cfg.n_buckets)
+        """Union view of all seen parts (membership queries/tests), at
+        the latest manifest's bucket count unless one is given."""
+        if n_buckets is None:
+            latest = self.state.manifest(self.state.latest_committed_round())
+            n_buckets = latest["stats"]["n_buckets"]
+        dfs = self._seen_parts(parts, n_buckets)
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)
@@ -293,38 +342,45 @@ class CrawlEngine:
 
     def _size_shuffle(self, pred_batch: int, avg_page_bytes: float) -> int | None:
         """Set spark.sql.shuffle.partitions for this round from the
-        predicted data volume. Returns the setting (None = left as-is).
-
-        Three rules compose (each measured, see CrawlConfig fields):
-        1. volume / target_partition_bytes is the base count;
-        2. it is capped at max_task_waves full waves of the scheduler
-           (per-task Python-stage overhead beats partition-size relief
-           once partitions are spill-safe), but never capped so hard
-           that partitions exceed spill_guard_partition_bytes — beyond
-           the guard the count rises with volume again;
-        3. the result is quantized UP to a multiple of the scheduler's
-           parallelism: a count like 12 on an 8-thread scheduler runs
-           a second task wave half-empty (4 busy / 4 idle) while a
-           2-thread scheduler is unaffected — exactly the asymmetry
-           that collapsed N→4N scaling to 0.391 in BENCH_r03.
-        Never shrinks below the parallelism; capped by
-        max_shuffle_partitions."""
+        predicted data volume (volume_partitions). Returns the setting
+        (None = left as-is)."""
         cfg = self.cfg
         if not cfg.auto_shuffle_partitions or pred_batch <= 0:
             return None
-        import math
-
         est = pred_batch * max(avg_page_bytes, 1.0) * cfg.shuffle_row_expansion
-        base = self.spark.sparkContext.defaultParallelism
-        by_target = max(1, math.ceil(est / cfg.target_partition_bytes))
-        by_guard = max(1, math.ceil(est / cfg.spill_guard_partition_bytes))
-        raw = max(min(by_target, cfg.max_task_waves * base), by_guard)
-        parts = min(
-            cfg.max_shuffle_partitions,
-            math.ceil(raw / base) * base,
-        )
+        parts = volume_partitions(est, self.spark.sparkContext.defaultParallelism, cfg)
         self.spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         return parts
+
+    def _volume_buckets(self, rows: int) -> int:
+        """Bucket count for a state of ``rows`` seen + frontier rows."""
+        return volume_partitions(
+            rows * STATE_ROW_BYTES,
+            self.spark.sparkContext.defaultParallelism,
+            self.cfg,
+        )
+
+    def _bootstrap_buckets(self) -> int:
+        """Round 0's bucket count: cfg.n_buckets, else derived from the
+        seed count."""
+        if self.cfg.n_buckets is not None:
+            return self.cfg.n_buckets
+        seeds = ops.load_seeds(self.spark, self.seeds_path)
+        return self._volume_buckets(seeds.count())
+
+    def _compaction_buckets(self, stats: dict, current: int) -> int:
+        """The bucket count a compaction round writes its full tables
+        at, given the previous manifest's stats and count in force:
+        cfg.n_buckets, else derived from the footer row counts of the
+        seen and frontier parts."""
+        if stats.get("sites_parts") and not self.cfg.dim_tables:
+            # sites-key parts this round carries over without a rewrite
+            # stay readable only at the count they were written at
+            return current
+        if self.cfg.n_buckets is not None:
+            return self.cfg.n_buckets
+        parts = stats["seen_parts"] + stats["frontier_parts"]
+        return self._volume_buckets(sum(self.state.part_rows(p) for p in parts))
 
     @staticmethod
     def _latest_per_host(rules: DataFrame) -> DataFrame:
@@ -476,7 +532,14 @@ class CrawlEngine:
         cfg = self.cfg
         prev = self.state.manifest(r - 1)
         assert prev is not None, f"round {r - 1} not committed"
-        n_buckets = int(prev["stats"].get("n_buckets", cfg.n_buckets))
+        # The manifest's bucket count is the one every bucketed read and
+        # the bloom probe use. A compaction round rewrites every
+        # bucketed table in full, so only it may write at another count.
+        n_buckets = int(prev["stats"]["n_buckets"])
+        compact = r % cfg.compact_seen_every == 0
+        out_buckets = (
+            self._compaction_buckets(prev["stats"], n_buckets) if compact else n_buckets
+        )
         frontier = self._frontier_view(prev["stats"], n_buckets)
         frontier_parts: list[str] = prev["stats"]["frontier_parts"]
         drained_parts: list[str] = prev["stats"].get("drained_parts", [])
@@ -722,7 +785,7 @@ class CrawlEngine:
             else:
                 key_dfs = []
             pending.append((sites_new, "sites"))
-            if r % cfg.compact_seen_every == 0:
+            if compact:
                 merged_keys = sites_new.select("site_id")
                 for kd in key_dfs:
                     merged_keys = merged_keys.unionByName(kd)
@@ -990,7 +1053,7 @@ class CrawlEngine:
                 os.path.join(self.state.root, "rounds", prev["stats"]["bloom"])
             )
             probed = bloom_ops.probe_shards(
-                cands, shards, cfg.n_buckets, cfg.shard_bits
+                cands, shards, n_buckets, cfg.shard_bits
             ).persist(_CACHE)
             negatives = probed.filter(~F.col("maybe_seen")).drop("maybe_seen", "bucket")
             positives = probed.filter(F.col("maybe_seen")).drop("maybe_seen", "bucket")
@@ -1007,7 +1070,7 @@ class CrawlEngine:
         seen_delta = new.select("url_norm", "url_hash", F.lit(r).alias("round_seen"))
 
         # compaction: every N rounds rewrite one merged seen table
-        if r % cfg.compact_seen_every == 0:
+        if compact:
             merged = seen_delta
             for d in seen_dfs:
                 merged = merged.unionByName(d)
@@ -1032,7 +1095,7 @@ class CrawlEngine:
         # folded in) on the seen-compaction cadence.
         # held rows (robots-first hold-back) are NOT in batch_use: they
         # survive both the full-rewrite anti-join and the tombstones.
-        if r % cfg.compact_seen_every == 0:
+        if compact:
             rest = frontier.join(
                 batch_use.select("url_hash"), "url_hash", "left_anti"
             )
@@ -1051,12 +1114,19 @@ class CrawlEngine:
         # ---- U8: bloom shard merge ------------------------------------
         bloom_rel = None
         if cfg.bloom_prefilter:
-            old_shards = self.spark.read.schema(schemas.BLOOM_SHARDS).parquet(
-                os.path.join(self.state.root, "rounds", prev["stats"]["bloom"])
-            )
-            shards2 = bloom_ops.build_shards(
-                new.select("url_norm"), cfg.n_buckets, cfg.shard_bits, old_shards
-            )
+            if out_buckets == n_buckets:
+                old_shards = self.spark.read.schema(schemas.BLOOM_SHARDS).parquet(
+                    os.path.join(self.state.root, "rounds", prev["stats"]["bloom"])
+                )
+                shards2 = bloom_ops.build_shards(
+                    new.select("url_norm"), n_buckets, cfg.shard_bits, old_shards
+                )
+            else:
+                # resharded: the old shards are keyed by the old count,
+                # so every shard is rebuilt from the merged seen set
+                shards2 = bloom_ops.build_shards(
+                    merged.select("url_norm"), out_buckets, cfg.shard_bits
+                )
             pending.append((shards2, "bloom"))
             bloom_rel = f"r{r:05d}/bloom"
 
@@ -1104,10 +1174,10 @@ class CrawlEngine:
             ts = time.monotonic()
             if name == "sites_keys":
                 self.state.write_bucketed(
-                    df, r, name, cfg.n_buckets, bucket_col="site_id"
+                    df, r, name, out_buckets, bucket_col="site_id"
                 )
             elif name in bucketed_names:
-                self.state.write_bucketed(df, r, name, cfg.n_buckets)
+                self.state.write_bucketed(df, r, name, out_buckets)
             else:
                 self._write(df, r, name)
             sink_ms[name] = int((time.monotonic() - ts) * 1000)
@@ -1138,7 +1208,7 @@ class CrawlEngine:
             if pages_fetched
             else 0
         )
-        if r % cfg.compact_seen_every == 0:
+        if compact:
             self.spark.sparkContext.setJobDescription(f"r{r:05d}:counters")
             n_new_frontier = new_frontier.count()
         else:
@@ -1160,7 +1230,7 @@ class CrawlEngine:
             "errors": n_errors,
             "batch": n_batch,
             "wall_ms": wall_ms,
-            "n_buckets": cfg.n_buckets,
+            "n_buckets": out_buckets,
             # feedback for next round's data-proportional shuffle sizing
             "avg_page_bytes": round(bytes_ok / pages_fetched, 1)
             if pages_fetched
@@ -1184,7 +1254,7 @@ class CrawlEngine:
                 "counters": int((t_counters - t_flush) * 1000),
             }
         self.state.commit_round(r, stats)
-        if cfg.gc_state and r % cfg.compact_seen_every == 0:
+        if cfg.gc_state and compact:
             stats["gc_removed"] = len(
                 self.state.gc_state(r, keep_rounds=1, spark=self.spark)
             )

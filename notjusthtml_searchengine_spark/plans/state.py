@@ -205,9 +205,15 @@ class CrawlState:
         union-aggregate job that re-scanned every cached frame
         (measured ~6s CPU/round at AQE-off, guide §1.2 'don't compute
         things you throw away')."""
+        return self.part_rows(f"r{r:05d}/{name}")
+
+    def part_rows(self, rel: str) -> int:
+        """Row count of the round table ``rel`` (``rNNNNN/<name>``)
+        from its parquet footers; sizes the state's bucket count at
+        compaction from the seen and frontier parts."""
         import pyarrow.parquet as pq
 
-        path = self.table_path(r, name)
+        path = os.path.join(self.root, "rounds", rel)
         total = 0
         for f in os.listdir(path):
             if f.endswith(".parquet"):

@@ -49,7 +49,8 @@ PAGES_GOLDEN = T.StructType(
 # ---------------------------------------------------------------------------
 # Engine state tables (FIXTURES.md §4-6). Frontier/seen are bucketed by
 # pmod(xxhash64(url_norm), n_buckets) so the load-bearing anti-join (J2)
-# shuffles neither side when both are written bucket-partitioned.
+# shuffles neither side when both are written bucket-partitioned; the
+# count in force is the one pinned in the round manifest.
 # ---------------------------------------------------------------------------
 FRONTIER = T.StructType(
     [
