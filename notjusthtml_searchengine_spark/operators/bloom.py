@@ -74,6 +74,9 @@ def build_shards(
     One groupBy(bucket) shuffle of the new urls; old shards are
     cogrouped in (copy-on-write of touched buckets happens at the
     write layer — untouched buckets pass through unchanged).
+    ``shard_bits`` sizes a bucket's first shard only: a stored shard
+    keeps its own width, so a state resumed with another setting
+    still merges at the width its shards were probed at.
     """
     hashed = with_bucket(bloom_cols(new_urls).withColumn("url_hash", F.col("h1")), n_buckets)
     spark = new_urls.sparkSession
@@ -89,7 +92,7 @@ def build_shards(
             bits = np.zeros(shard_bits // 8, dtype=np.uint8)
             n_items = 0
         if len(new_pdf):
-            pos = _positions(new_pdf["h1"].to_numpy(), new_pdf["h2"].to_numpy(), shard_bits)
+            pos = _positions(new_pdf["h1"].to_numpy(), new_pdf["h2"].to_numpy(), len(bits) * 8)
             _set_bits(bits, pos)
             n_items += len(new_pdf)
         return pd.DataFrame(
@@ -104,8 +107,9 @@ def build_shards(
     )
 
 
-def probe_shards(cands: DataFrame, shards: DataFrame, n_buckets: int, shard_bits: int) -> DataFrame:
-    """cands + boolean ``maybe_seen`` column (bloom positive)."""
+def probe_shards(cands: DataFrame, shards: DataFrame, n_buckets: int) -> DataFrame:
+    """cands + boolean ``maybe_seen`` column (bloom positive). Each
+    shard is probed at its stored width."""
     hashed = with_bucket(bloom_cols(cands), n_buckets, hash_col="h1")
     out_schema = hashed.drop("h1", "h2").schema.add("maybe_seen", "boolean", False)
     other_cols = [c for c in hashed.columns if c not in ("h1", "h2")]
@@ -115,7 +119,7 @@ def probe_shards(cands: DataFrame, shards: DataFrame, n_buckets: int, shard_bits
             return pd.DataFrame(columns=[c for c in out_schema.names])
         if len(shard_pdf):
             bits = np.frombuffer(shard_pdf.iloc[0]["bits"], dtype=np.uint8)
-            pos = _positions(cand_pdf["h1"].to_numpy(), cand_pdf["h2"].to_numpy(), shard_bits)
+            pos = _positions(cand_pdf["h1"].to_numpy(), cand_pdf["h2"].to_numpy(), len(bits) * 8)
             maybe = _test_bits(bits, pos)
         else:
             maybe = np.zeros(len(cand_pdf), dtype=bool)

@@ -1,15 +1,27 @@
 """The batch-BFS round driver (SURVEY.md §3.1 — the Spark shape).
 
-One crawl round = one DAG:
+One crawl round = one DAG; ``CrawlEngine.run_round`` runs it as a
+chain of stage methods (named on the right), each DataFrame-in,
+DataFrame-out:
 
-  frontier ─drain(W1/W2)→ batch ─⋈ pages(J6, broadcast+DPP)→ gates(P3/P4)
-    → sha1/sha512/sniff(F8/F9/U4) → contents/blob sinks (S7/S8, A4/J7)
-    → media branch (P7 → U5/U6 → sinks S11, errors E2)
-    → html gate (P5/P6) → U1 explode → keywords sink (S10)
-    → rating (J5+A1) → priority (P1/P2+override) → link_rels sink (S9)
+  frontier ─drain(W1/W2)→ batch                              _drain
+    → robots-first hold-back + drain-time robots backstop    _hold_back
+    ─⋈ pages(J6, broadcast+DPP)→ gates(P3/P4)
+    → fused extract: U1 + sha1/sha512/sniff(F8/F9/U4)        _fetch_extract
+    → contents / dimension / blob sinks (S7/S8, A4/J7)       _dim_sinks
+    → media branch (P7 → U5/U6 → sinks S11, errors E2)       _media
+    → robots.txt self-ingestion                              _ingest_robots
+    → keywords sink (S10) → rating (J5+A1)
+      → priority (P1/P2+override) → link_rels sink (S9)      _rate
     → candidates: collapse (A5/A6) → robots/politeness filter
-    → seen check (J2: bloom pre-filter U8 + exact anti-join)
-    → frontier_{r+1} / seen delta / bloom shards / metrics → atomic commit
+      → seen check (J2: bloom pre-filter U8 + exact anti-join) _candidates
+    → frontier_{r+1} / seen delta / bloom shards             _state_writes
+    → concurrent sink writes                                 _flush
+    → counters, round_stats, atomic manifest commit, GC      _commit
+
+A small per-round record (``_Round``) carries what the stages hand
+each other; it is the one place a round labels its Spark jobs, takes
+its phase timestamps and persists frames.
 
 The reference's continuous goroutine pipeline (/root/reference/
 main.go:59-90, html.go:30-188) maps onto this loop; its Redis SPop /
@@ -21,9 +33,11 @@ still enter the seen set).
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
@@ -42,13 +56,18 @@ _CACHE = StorageLevel.MEMORY_AND_DISK
 # n rows as n × this.
 STATE_ROW_BYTES = 128
 
+# Concurrent sink-writer threads: the dozen per-round sink jobs are
+# individually tiny, so at 6 threads the flush ran two serial waves
+# whose second wave was latency, not throughput (the scheduler
+# overlaps all jobs fine; measured r6).
+WRITE_THREADS = 12
+
 from .. import schemas
 from ..extract.udfs import extract_with_meta
 from ..functions.urlnorm import host_expr, path_expr, protocol_expr
 from ..media.udfs import exif_udf, phash_udf
 from ..operators import bloom as bloom_ops
 from ..operators import crawl_ops as ops
-from ..session import MAX_FILESIZE
 from .state import CrawlState
 
 
@@ -257,48 +276,27 @@ class CrawlEngine:
             .withColumn("round_added", F.lit(0))
             .withColumn("url_hash", F.xxhash64("url_norm"))
         )
+        seen0 = self.spark.createDataFrame([], schemas.SEEN)
         if self.cfg.fetch_robots_txt:
             # Pre-enqueue each seed host's robots.txt so even the SEED
             # fetch waits for rules: round 1's drain holds the seeds
-            # back (robots-first hold-back in run_round) and fetches
-            # the robots alone; the seeds follow in round 2 under the
-            # just-learned rules. Without this, seeds are the one url
-            # class fetched rules-blind.
-            rob = (
-                frontier.groupBy("host")
-                .agg(F.max(protocol_expr("url_norm")).alias("_scheme"))
-                .filter(F.length("_scheme") > 0)
-                .select(
-                    F.concat(
-                        F.col("_scheme"), F.lit("://"), F.col("host"),
-                        F.lit("/robots.txt"),
-                    ).alias("url_norm"),
-                    "host",
-                    F.lit(ops.PRIORITY_ROBOTS).alias("priority"),
-                    F.lit(0).alias("depth"),
-                    F.lit(0).alias("round_added"),
-                )
-                .withColumn("url_hash", F.xxhash64("url_norm"))
-            )
+            # back (_hold_back) and fetches the robots alone; the seeds
+            # follow in round 2 under the just-learned rules. Without
+            # this, seeds are the one url class fetched rules-blind.
+            rob = _robots_txt_rows(frontier).withColumn("round_added", F.lit(0))
             frontier = frontier.unionByName(rob)
-        self.state.write_bucketed(frontier, r, "frontier_full", n_buckets)
-        seen0 = self.spark.createDataFrame([], schemas.SEEN)
-        if self.cfg.fetch_robots_txt:
-            # the bootstrap robots rows enter seen immediately (unlike
-            # seeds, which faithfully stay out — crawling.go:153-175):
-            # the per-round candidate-stage prefetch relies on the seen
-            # check to enqueue each host's robots exactly once, and a
-            # seen-less bootstrap row would be re-added and re-fetched
-            # the first time its host shows up among candidates.
+            # the bootstrap robots rows enter seen (and the bloom)
+            # immediately, unlike seeds (crawling.go:153-175): the
+            # candidate-stage prefetch relies on the seen check to
+            # enqueue each host's robots exactly once.
             seen0 = seen0.unionByName(
-                frontier.filter(path_expr("url_norm") == "/robots.txt").select(
-                    "url_norm", "url_hash", F.lit(0).alias("round_seen")
-                )
+                rob.select("url_norm", "url_hash", F.lit(0).alias("round_seen"))
             )
+        self.state.write_bucketed(frontier, r, "frontier_full", n_buckets)
         self.state.write_bucketed(seen0, r, "seen_full", n_buckets)
         if self.cfg.bloom_prefilter:
             shards = bloom_ops.build_shards(
-                seeds.limit(0), n_buckets, self.cfg.shard_bits
+                seen0.select("url_norm"), n_buckets, self.cfg.shard_bits
             )
             self._write(shards, r, "bloom")
         self.state.commit_round(
@@ -334,11 +332,12 @@ class CrawlEngine:
         if n_buckets is None:
             latest = self.state.manifest(self.state.latest_committed_round())
             n_buckets = latest["stats"]["n_buckets"]
-        dfs = self._seen_parts(parts, n_buckets)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        return _union(self._seen_parts(parts, n_buckets))
+
+    def _read_shards(self, rel: str) -> DataFrame:
+        return self.spark.read.schema(schemas.BLOOM_SHARDS).parquet(
+            os.path.join(self.state.root, "rounds", rel)
+        )
 
     def _size_shuffle(self, pred_batch: int, avg_page_bytes: float) -> int | None:
         """Set spark.sql.shuffle.partitions for this round from the
@@ -383,16 +382,22 @@ class CrawlEngine:
         return self._volume_buckets(sum(self.state.part_rows(p) for p in parts))
 
     @staticmethod
-    def _latest_per_host(rules: DataFrame) -> DataFrame:
-        """One rules row per host: highest fetched_round wins; freshly
-        fetched rows (_src=1) beat the static table on ties."""
+    def _merge_rules(rules: DataFrame | None, fresh: DataFrame | None) -> DataFrame:
+        """One rules row per host from ``rules`` and ``fresh``: highest
+        fetched_round wins; ``fresh`` beats ``rules`` on ties."""
         from pyspark.sql.window import Window
 
+        tagged = [
+            df.withColumn("_src", F.lit(src))
+            for src, df in ((0, rules), (1, fresh))
+            if df is not None
+        ]
         w = Window.partitionBy("host").orderBy(
             F.desc_nulls_last("fetched_round"), F.desc("_src")
         )
         return (
-            rules.withColumn("_rn", F.row_number().over(w))
+            _union(tagged)
+            .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn", "_src")
         )
@@ -414,21 +419,16 @@ class CrawlEngine:
             # for an unchanged result (guide §2.4: remove repeated
             # exchanges of static inputs).
             if self._static_rules is None:
-                self._static_rules = self._latest_per_host(
-                    self.robots.withColumn("_src", F.lit(0))
+                self._static_rules = self._merge_rules(
+                    self.robots, None
                 ).localCheckpoint(eager=True)
             return self._static_rules
-        base = None
-        if self.robots is not None:
-            base = self.robots.withColumn("_src", F.lit(0))
-        if has_fetched:
-            fetched = (
-                self.spark.read.schema(schemas.ROBOTS)
-                .parquet(self.state.sink_glob("robots"))
-                .withColumn("_src", F.lit(1))
-            )
-            base = fetched if base is None else base.unionByName(fetched)
-        return None if base is None else self._latest_per_host(base)
+        if not has_fetched:
+            return None
+        fetched = self.spark.read.schema(schemas.ROBOTS).parquet(
+            self.state.sink_glob("robots")
+        )
+        return self._merge_rules(self.robots, fetched)
 
     def _batch_stats(self, batch: DataFrame) -> tuple[int, int]:
         """(row count, estimated broadcast bytes) in ONE job: measured
@@ -465,7 +465,6 @@ class CrawlEngine:
             self.state.read_bucketed(self.spark, p, FRONTIER_DDL, n_buckets)
             for p in stats["frontier_parts"]
         ]
-        drained_parts = stats.get("drained_parts", [])
         # Per-PART tombstone filtering, BEFORE the union: a union of
         # bucketed scans loses HashPartitioning (Spark never propagates
         # it through Union), so the old union-then-join paid one full
@@ -478,39 +477,32 @@ class CrawlEngine:
         # per-part filters keep the max-drained-round semantics exactly
         # (same-round seed re-enqueue included). Tombstone part count
         # is bounded by the compaction cadence.
-        if drained_parts:
-            tombs = [
-                self.state.read_bucketed(self.spark, p, DRAINED_DDL, n_buckets)
-                .groupBy("url_hash")
-                .agg(F.max("drained_round").alias("_dr"))
-                for p in drained_parts
-            ]
-            live = []
-            for fp in parts:
-                out = fp
-                for t in tombs:
-                    out = (
-                        out.join(t, "url_hash", "left")
-                        .filter(
-                            F.col("_dr").isNull()
-                            | (F.col("round_added") >= F.col("_dr"))
-                        )
-                        .drop("_dr")
+        tombs = [
+            self.state.read_bucketed(self.spark, p, DRAINED_DDL, n_buckets)
+            .groupBy("url_hash")
+            .agg(F.max("drained_round").alias("_dr"))
+            for p in stats.get("drained_parts", [])
+        ]
+        live = []
+        for out in parts:
+            for t in tombs:
+                out = (
+                    out.join(t, "url_hash", "left")
+                    .filter(
+                        F.col("_dr").isNull()
+                        | (F.col("round_added") >= F.col("_dr"))
                     )
-                live.append(out)
-            parts = live
-        frontier = parts[0]
-        for p in parts[1:]:
-            frontier = frontier.unionByName(p)
-        return frontier
+                    .drop("_dr")
+                )
+            live.append(out)
+        return _union(live)
 
     def _lineage(self, dfs: dict[str, tuple], r: int) -> DataFrame:
         """Per-partition lineage rows (north_rule) in one unioned job:
         row count AND payload byte sum per partition (each stage names
         the column expression that measures its payload)."""
-        parts = []
-        for stage, (df, bytes_expr) in dfs.items():
-            parts.append(
+        return _union(
+            [
                 df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
                     F.count(F.lit(1)).alias("rows_out"),
                     F.coalesce(F.sum(bytes_expr), F.lit(0))
@@ -520,59 +512,110 @@ class CrawlEngine:
                 .withColumn("round", F.lit(r))
                 .withColumn("stage", F.lit(stage))
                 .select("round", "stage", "partition_id", "rows_out", "bytes")
+                for stage, (df, bytes_expr) in dfs.items()
+            ]
+        )
+
+    def _new_keys(self, df: DataFrame, r: int, name: str, schema, key: str) -> DataFrame:
+        """``df`` minus the ``key`` values earlier rounds' ``name`` sink
+        holds. Guarded on files actually existing: resuming a state dir
+        whose earlier rounds never wrote this sink (sink newly enabled)
+        must insert all keys, not fail the read."""
+        if r > 1 and self.state.sink_exists(name):
+            existing = self.spark.read.schema(schema).parquet(
+                self.state.sink_glob(name)
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            df = df.join(existing.select(key), key, "left_anti")
+        return df
+
+    def _compact_or_append(
+        self, rnd: _Round, full: str, delta: str, rows: DataFrame,
+        parts: list[str], part_dfs: list[DataFrame], bucket_col: str = "url_hash",
+    ) -> tuple[list[str], DataFrame]:
+        """Sink a bucketed state table's round rows: merged with every
+        earlier part into one ``full`` table on a compaction round,
+        else as a ``delta`` part appended to ``parts``. Returns the new
+        part list and the frame written."""
+        if rnd.compact:
+            rows, parts, name = _union([rows, *part_dfs]), [], full
+        else:
+            name = delta
+        rnd.sink(rows, name, bucket_col)
+        return parts + [f"r{rnd.r:05d}/{name}"], rows
 
     # ------------------------------------------------------------------
     def run_round(self, r: int) -> dict:
-        t0 = time.monotonic()
-        cfg = self.cfg
         prev = self.state.manifest(r - 1)
         assert prev is not None, f"round {r - 1} not committed"
         # The manifest's bucket count is the one every bucketed read and
         # the bloom probe use. A compaction round rewrites every
         # bucketed table in full, so only it may write at another count.
-        n_buckets = int(prev["stats"]["n_buckets"])
-        compact = r % cfg.compact_seen_every == 0
+        stats = prev["stats"]
+        n_buckets = int(stats["n_buckets"])
+        compact = r % self.cfg.compact_seen_every == 0
         out_buckets = (
-            self._compaction_buckets(prev["stats"], n_buckets) if compact else n_buckets
+            self._compaction_buckets(stats, n_buckets) if compact else n_buckets
         )
-        frontier = self._frontier_view(prev["stats"], n_buckets)
-        frontier_parts: list[str] = prev["stats"]["frontier_parts"]
-        drained_parts: list[str] = prev["stats"].get("drained_parts", [])
-        seen_parts: list[str] = prev["stats"]["seen_parts"]
-        seen_dfs = self._seen_parts(seen_parts, n_buckets)
+        rnd = _Round(self.spark, r, stats, n_buckets, out_buckets, compact)
 
+        frontier, rules, batch = self._drain(rnd)
+        if batch is None:
+            return {"done": True, "round": r, "pages_fetched": 0}
+        batch_use, batch_fetch, blocked = self._hold_back(rnd, batch, rules)
+        gated, combined, ok = self._fetch_extract(rnd, batch_fetch)
+        self._dim_sinks(rnd, gated, ok)
+        self._media(rnd, gated)
+        fresh_rules = self._ingest_robots(rnd, gated)
+        rated = self._rate(rnd, combined)
+        if fresh_rules is not None:
+            # rules fetched THIS round already filter its own candidates
+            rules = self._merge_rules(rules, fresh_rules)
+        seen_dfs = self._seen_parts(stats["seen_parts"], n_buckets)
+        new = self._candidates(rnd, rated, rules, seen_dfs)
+        new_frontier = self._state_writes(rnd, new, frontier, batch_use, seen_dfs)
+        rnd.sink(_union([*rnd.errors, blocked]), "errors")
+        if self.cfg.lineage_metrics:
+            lineage = {
+                "batch": (batch, F.length("url_norm")),
+                "fetched_ok": (ok, F.col("size")),
+                "links": (rated, F.length("dest_url")),
+                "new_seen": (new, F.length("url_norm")),
+            }
+            rnd.sink(self._lineage(lineage, r), "metrics")
+        self._flush(rnd)
+        return self._commit(rnd, new_frontier)
+
+    def _drain(self, rnd: _Round) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
+        """W1/W2: (live frontier, robots rules in force, this round's
+        politeness-capped batch — None when the frontier is empty).
+        The batch is checkpointed with its robots flag and sizes the
+        round's shuffles."""
+        cfg, prev = self.cfg, rnd.prev
+        frontier = self._frontier_view(prev, rnd.n_buckets)
         # data-proportional shuffle sizing: predict this round's batch
         # from the previous round's frontier additions (exact n_batch
         # refines it right after the drain; under-prediction here only
         # affects the drain's own window shuffle)
-        prev_avg_bytes = float(prev["stats"].get("avg_page_bytes", cfg.est_page_bytes))
-        pred_batch = int(prev["stats"].get("new_frontier", 0) or 0)
+        avg_bytes = float(prev.get("avg_page_bytes", cfg.est_page_bytes))
+        pred_batch = int(prev.get("new_frontier", 0) or 0)
         if cfg.round_budget is not None:
             pred_batch = min(pred_batch, cfg.round_budget)
-        shuffle_parts = self._size_shuffle(pred_batch, prev_avg_bytes)
+        shuffle_parts = self._size_shuffle(pred_batch, avg_bytes)
 
-        # ---- W1/W2: drain --------------------------------------------
-        robots_rules_df = self._robots_view()
+        rules = self._robots_view()
         host_caps = None
-        if robots_rules_df is not None and cfg.round_seconds:
-            host_caps = ops.crawl_delay_caps(robots_rules_df, cfg.round_seconds)
+        if rules is not None and cfg.round_seconds:
+            host_caps = ops.crawl_delay_caps(rules, cfg.round_seconds)
         batch = ops.drain_frontier(
             frontier, cfg.round_budget, cfg.per_host_budget, host_caps=host_caps
         )
         # The drain-time robots backstop flag is folded in BEFORE the
-        # persist: every consumer (fetch, misses, error rows,
-        # tombstones) reads one cached frame, instead of re-evaluating
-        # a join-above-the-cache per consumer (measured ~15% round
-        # cost at local[8] when it sat above the cache).
-        if robots_rules_df is not None:
-            batch = ops.robots_mark(
-                batch, robots_rules_df, exempt_robots_txt=True
-            )
+        # checkpoint: every consumer (fetch, misses, error rows,
+        # tombstones) reads one materialized frame, instead of
+        # re-evaluating a join above it per consumer (measured ~15%
+        # round cost at local[8] when it sat above the cache).
+        if rules is not None:
+            batch = ops.robots_mark(batch, rules, exempt_robots_txt=True)
         # localCheckpoint, not persist (r6): the batch is consumed by a
         # dozen downstream sink actions, and EVERY one of them was
         # re-analyzing the full drain lineage (frontier-view per-part
@@ -582,35 +625,49 @@ class CrawlEngine:
         # that collapsed the capped leg's core scaling (guide §7.3
         # "planning time itself can become the bottleneck", §3.3
         # "materialising an intermediate truncates the plan").
-        # Checkpointing materializes the same skinny frame the persist
-        # did, but downstream plans now start from a short scan. Fault
-        # tolerance of this intermediate is round-local (the round
+        # Fault tolerance of this intermediate is round-local (the round
         # re-runs from the manifest on failure), so cutting lineage is
-        # safe — same trade as graph.py's iteration checkpoints.
-        self.spark.sparkContext.setJobDescription(f"r{r:05d}:drain+stats")
+        # safe — same trade as graph.py's iteration checkpoints. Its
+        # blocks are released by the ContextCleaner when the round's
+        # references drop.
+        rnd.label("drain+stats")
         batch = batch.localCheckpoint(eager=True)
         n_batch, batch_bytes = self._batch_stats(batch)
-        broadcast_batch = batch_bytes <= cfg.broadcast_max_bytes
-        resized = self._size_shuffle(n_batch, prev_avg_bytes)
-        if resized is not None:
-            shuffle_parts = resized
-        if n_batch == 0:
-            return {"done": True, "round": r, "pages_fetched": 0}
+        rnd.broadcast = batch_bytes <= cfg.broadcast_max_bytes
+        resized = self._size_shuffle(n_batch, avg_bytes)
+        rnd.stats["batch"] = n_batch
+        rnd.stats["shuffle_partitions"] = shuffle_parts if resized is None else resized
+        return frontier, rules, batch if n_batch else None
 
-        # ---- robots-first hold-back -----------------------------------
-        # A host's FIRST drain wave is its robots.txt alone: a url
-        # whose host has its own /robots.txt row in this very batch
-        # (rules still unknown — links and the robots prefetch join
-        # the frontier in the same round) is HELD — excluded from the
-        # fetch AND from the drained tombstones, so it stays queued
-        # and drains next round under the just-fetched rules. One
-        # broadcast semi-join over the budget-bounded batch; a held
-        # url costs one under-filled drain slot for one round, and
-        # there is no starvation (the robots url is tombstoned this
-        # round, so next round the host is no longer held whether its
-        # robots fetch hit or missed).
+    def _hold_back(
+        self, rnd: _Round, batch: DataFrame, rules: DataFrame | None
+    ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+        """(drained rows, rows to fetch, robots-blocked error rows).
+
+        Robots-first hold-back: a host's FIRST drain wave is its
+        robots.txt alone. A url whose host has its own /robots.txt row
+        in this very batch (rules still unknown — links and the robots
+        prefetch join the frontier in the same round) is HELD —
+        excluded from the fetch AND from the drained tombstones, so it
+        stays queued and drains next round under the just-fetched
+        rules. One broadcast semi-join over the budget-bounded batch; a
+        held url costs one under-filled drain slot for one round, and
+        there is no starvation (the robots url is tombstoned this
+        round, so next round the host is no longer held whether its
+        robots fetch hit or missed).
+
+        Drain-time backstop: the candidate-time robots_filter can only
+        apply rules that existed when a url was DISCOVERED — rules that
+        arrived later (or the hold-back's round-delayed first wave)
+        must still be enforced. RFC practice is to check robots
+        immediately before fetching: rows the drain flagged
+        ``robots_blocked`` divert to the error sink. They stay among
+        the drained rows, so the tombstones still remove them from the
+        frontier — each late-blocked url costs one drain slot, once,
+        ever. /robots.txt itself is always fetchable.
+        """
         batch_use = batch
-        if cfg.fetch_robots_txt:
+        if self.cfg.fetch_robots_txt:
             is_rob = path_expr("url_norm") == "/robots.txt"
             held_hosts = batch.filter(is_rob).select("host").distinct()
             batch_use = batch.filter(is_rob).unionByName(
@@ -618,36 +675,22 @@ class CrawlEngine:
                     F.broadcast(held_hosts), "host", "left_anti"
                 )
             )
+        if rules is None:
+            return batch_use, batch_use, None
+        blocked = _error_rows(
+            batch_use.filter(F.col("robots_blocked")), rnd.r,
+            schemas.ERROR_CODES["ErrorRobotsBlocked"], "robots",
+        )
+        fetch = batch_use.filter(~F.col("robots_blocked")).drop("robots_blocked")
+        return batch_use, fetch, blocked
 
-        # ---- drain-time robots backstop -------------------------------
-        # The candidate-time robots_filter (below) can only apply rules
-        # that existed when a url was DISCOVERED — rules that arrived
-        # later (or the hold-back's round-delayed first wave) must
-        # still be enforced. RFC practice is to check robots
-        # immediately before fetching: the ``robots_blocked`` flag was
-        # computed inside the persisted drain frame above (one
-        # broadcast join over a budget-bounded frame — NOT the whole
-        # frontier, which would be O(frontier) per round); blocked
-        # rows divert to the error sink. They stay in ``batch_use`` so
-        # the drained tombstones still remove them from the frontier —
-        # each late-blocked url costs one drain slot, once, ever.
-        # /robots.txt itself is always fetchable.
-        err_robots = None
-        batch_fetch = batch_use
-        if robots_rules_df is not None:
-            err_robots = batch_use.filter(F.col("robots_blocked")).select(
-                F.lit(r).alias("round"),
-                F.col("url_norm").alias("url"),
-                F.lit(schemas.ERROR_CODES["ErrorRobotsBlocked"])
-                .cast("int")
-                .alias("error_code"),
-                F.lit("robots").alias("error_text"),
-            )
-            batch_fetch = batch_use.filter(~F.col("robots_blocked")).drop(
-                "robots_blocked"
-            )
-
-        # ---- J6: fetch + gates; salt hot hosts before the fat UDFs ----
+    def _fetch_extract(
+        self, rnd: _Round, batch_fetch: DataFrame
+    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """J6 fetch + gates, then one fused extract pass: (gated fat
+        rows, extracted rows, per-page meta of the ok pages). Gate and
+        miss rows go to the errors sink."""
+        cfg, r = self.cfg, rnd.r
         # column-prune before the join: text/lang are never used in
         # the round (text regeneration is a test-side invariant).
         # Inner-join + broadcast batch: the corpus is never shuffled;
@@ -655,7 +698,7 @@ class CrawlEngine:
         fetched = ops.fetch_hits(
             batch_fetch,
             self.pages.select("url", "warc_ts", "html"),
-            broadcast_batch=broadcast_batch,
+            broadcast_batch=rnd.broadcast,
         )
         gated = ops.gate_fetched(fetched)
         # Salted redistribution before the fat UDFs spreads hot hosts
@@ -676,7 +719,7 @@ class CrawlEngine:
         # re-derived per consumer from the compressed scan + broadcast
         # join, per cfg.cache_fat.
         if cfg.cache_fat:
-            gated = gated.persist(_CACHE)
+            gated = rnd.persist(gated)
         # ONE fat pass for extraction AND the per-page meta columns
         # (r6): sniff/sha1/sha512/size ride the same scan that feeds
         # U1 instead of a second full corpus decode per round (the
@@ -698,7 +741,7 @@ class CrawlEngine:
         # Skinny meta cache: one row per fetched page; the dozen sink/
         # stat consumers below scan this cheap projection instead of
         # the 30x-larger combined frame.
-        meta = (
+        meta = rnd.persist(
             combined.filter(F.col("kind") == 0)
             .select(
                 "url_norm", "host", "depth", "time_found", "gate",
@@ -706,59 +749,40 @@ class CrawlEngine:
             )
             .withColumn("site_id", F.xxhash64("url_norm"))
             .withColumn("content_id", F.xxhash64("url_norm", F.lit(r)))
-            .persist(_CACHE)
         )
-        ok = meta.filter(F.col("gate") == "ok")
-
         missed = ops.fetch_misses(batch_fetch, meta)
-        err_gate = meta.filter(F.col("gate") != "ok").select(
-            F.lit(r).alias("round"),
-            F.col("url_norm").alias("url"),
-            F.when(F.col("gate") == "too_big", schemas.ERROR_CODES["ErrorResponseToBig"])
-            .otherwise(schemas.ERROR_CODES["ErrorBodyLenZero"])
-            .cast("int")
-            .alias("error_code"),
-            F.col("gate").alias("error_text"),
-        ).unionByName(
-            missed.select(
-                F.lit(r).alias("round"),
-                F.col("url_norm").alias("url"),
-                F.lit(schemas.ERROR_CODES["ErrorFetchMissing"]).cast("int").alias("error_code"),
-                F.lit("miss").alias("error_text"),
-            )
-        )
+        codes = schemas.ERROR_CODES
+        rnd.errors += [
+            _error_rows(
+                meta.filter(F.col("gate") != "ok"), r,
+                F.when(F.col("gate") == "too_big", codes["ErrorResponseToBig"])
+                .otherwise(codes["ErrorBodyLenZero"]),
+                F.col("gate"),
+            ),
+            _error_rows(missed, r, codes["ErrorFetchMissing"], "miss"),
+        ]
+        return gated, combined, meta.filter(F.col("gate") == "ok")
 
-        # Sink writes are deferred: persisted parents are materialized
-        # once (via the stats counts below), then all independent sink
-        # writes run concurrently from a thread pool — each write is a
-        # separate Spark job and the scheduler overlaps them, hiding
-        # per-job launch latency (a dozen sequential ~0.5s jobs/round
-        # would otherwise dominate small rounds).
-        pending: list[tuple] = []
-
-        # ---- S8 contents / S7 blobs (A4+J7) ---------------------------
+    def _dim_sinks(self, rnd: _Round, gated: DataFrame, ok: DataFrame) -> None:
+        """S8 contents, the J1/J3/J4 dimension tables and the S7
+        content-addressed blob store (A4+J7)."""
+        cfg, r = self.cfg, rnd.r
         contents = ok.select(
-            F.lit(r).alias("round"),
-            F.col("url_norm").alias("url"),
-            "site_id",
+            F.lit(r).alias("round"), F.col("url_norm").alias("url"), "site_id",
             F.xxhash64("content_type").alias("content_type_id"),
-            "size",
-            "sha512",
-            "sha1",
-            "time_found",
+            "size", "sha512", "sha1", "time_found",
         )
-        pending.append((contents, "contents"))
-
-        # ---- J1/J3/J4 dimension tables (reference database.go:143-215:
-        # sites / domains / content_types as first-class queryable
-        # tables). Ids are deterministic xxhash64 of the natural key, so
-        # the dim row is derivable — but the reference exposes them as
-        # tables ("list crawled domains" must not rescan contents), so
-        # each round left-anti-inserts the new keys. NOTE: the glob read
-        # below resolves its file list at plan-construction time (before
-        # this round's dirs exist), so the concurrent sink writes cannot
-        # race it.
-        new_sites_parts: list[str] = prev["stats"].get("sites_parts", [])
+        rnd.sink(contents, "contents")
+        # Dimension tables (reference database.go:143-215: sites /
+        # domains / content_types as first-class queryable tables).
+        # Ids are deterministic xxhash64 of the natural key, so the dim
+        # row is derivable — but the reference exposes them as tables
+        # ("list crawled domains" must not rescan contents), so each
+        # round left-anti-inserts the new keys. The glob reads resolve
+        # their file list at plan-construction time (before this
+        # round's dirs exist), so the concurrent sink writes cannot
+        # race them.
+        rnd.stats["sites_parts"] = rnd.prev.get("sites_parts", [])
         if cfg.dim_tables:
             # sites grows with the crawl (≈ fetched pages), so its
             # insert check gets the seen treatment: a bucketed
@@ -769,63 +793,37 @@ class CrawlEngine:
             # domains/content_types are small dims — glob read is fine.
             from .state import SITES_KEYS_DDL
 
-            sites_parts = list(new_sites_parts)
+            sites_parts = rnd.stats["sites_parts"]
+            key_dfs = [
+                self.state.read_bucketed(
+                    self.spark, p, SITES_KEYS_DDL, rnd.n_buckets,
+                    bucket_col="site_id",
+                )
+                for p in sites_parts
+            ]
             sites_new = ok.select(
                 "site_id", F.col("url_norm").alias("url")
             ).dropDuplicates(["site_id"])
-            if sites_parts:
-                key_dfs = [
-                    self.state.read_bucketed(
-                        self.spark, p, SITES_KEYS_DDL, n_buckets,
-                        bucket_col="site_id",
-                    )
-                    for p in sites_parts
-                ]
+            if key_dfs:
                 sites_new = ops.anti_join_parts(sites_new, key_dfs, key="site_id")
-            else:
-                key_dfs = []
-            pending.append((sites_new, "sites"))
-            if compact:
-                merged_keys = sites_new.select("site_id")
-                for kd in key_dfs:
-                    merged_keys = merged_keys.unionByName(kd)
-                pending.append((merged_keys, "sites_keys"))
-                new_sites_parts = [f"r{r:05d}/sites_keys"]
-            else:
-                pending.append((sites_new.select("site_id"), "sites_keys"))
-                new_sites_parts = sites_parts + [f"r{r:05d}/sites_keys"]
-
-            dims = [
-                (
-                    "domains",
-                    schemas.DOMAINS,
-                    "domain_id",
-                    ok.select(
-                        F.xxhash64("host").alias("domain_id"),
-                        F.col("host").alias("domain"),
-                    ),
-                ),
-                (
-                    "content_types",
-                    schemas.CONTENT_TYPES,
-                    "content_type_id",
-                    ok.select(
-                        F.xxhash64("content_type").alias("content_type_id"),
-                        "content_type",
-                    ),
-                ),
-            ]
-            for dim_name, dim_schema, key, dim_df in dims:
-                d = dim_df.dropDuplicates([key])
-                # guard on files actually existing: resuming a state
-                # dir whose earlier rounds never wrote this dim (sink
-                # newly enabled) must insert all keys, not fail the read
-                if r > 1 and self.state.sink_exists(dim_name):
-                    existing = self.spark.read.schema(dim_schema).parquet(
-                        self.state.sink_glob(dim_name)
-                    )
-                    d = d.join(existing.select(key), key, "left_anti")
-                pending.append((d, dim_name))
+            rnd.sink(sites_new, "sites")
+            rnd.stats["sites_parts"], _ = self._compact_or_append(
+                rnd, "sites_keys", "sites_keys", sites_new.select("site_id"),
+                sites_parts, key_dfs, bucket_col="site_id",
+            )
+            domains = ok.select(
+                F.xxhash64("host").alias("domain_id"), F.col("host").alias("domain")
+            )
+            types = ok.select(
+                F.xxhash64("content_type").alias("content_type_id"), "content_type"
+            )
+            for name, schema, df in (
+                ("domains", schemas.DOMAINS, domains),
+                ("content_types", schemas.CONTENT_TYPES, types),
+            ):
+                key = df.columns[0]
+                d = self._new_keys(df.dropDuplicates([key]), r, name, schema, key)
+                rnd.sink(d, name)
 
         if cfg.write_blobs:
             # Content-addressed store WITHOUT shuffling the fat bodies:
@@ -833,110 +831,123 @@ class CrawlEngine:
             # aggregate, anti-join winners against the store, then join
             # the winner keys back against the persisted ok frame — the
             # html column never moves (dropDuplicates(sha1) would
-            # shuffle every body by sha1). Winner set ≈ round size;
-            # broadcast below the same threshold as the fetch batch.
-            blob_glob = self.state.sink_glob("content_blobs")
-            winners = ok.groupBy("sha1").agg(F.min("url_norm").alias("_w"))
-            if r > 1 and self.state.sink_exists("content_blobs"):
-                existing = self.spark.read.schema(schemas.CONTENT_BLOBS).parquet(blob_glob)
-                winners = winners.join(existing.select("sha1"), "sha1", "left_anti")
-            # winner rows (sha1 + url) are the same scale as the batch;
-            # reuse its byte estimate for the broadcast decision
-            if broadcast_batch:
+            # shuffle every body by sha1). Winner rows (sha1 + url) are
+            # the same scale as the batch, so they broadcast on the
+            # batch's byte estimate.
+            winners = self._new_keys(
+                ok.groupBy("sha1").agg(F.min("url_norm").alias("_w")),
+                r, "content_blobs", schemas.CONTENT_BLOBS, "sha1",
+            )
+            if rnd.broadcast:
                 winners = F.broadcast(winners)
-            # join the winner URLS back against the fat cache: sha1
-            # comes from the (skinny) winner side — the bodies are
+            # sha1 comes from the (skinny) winner side — the bodies are
             # neither shuffled nor re-hashed.
             new_blobs = (
                 gated.select("url_norm", F.col("html").alias("content"))
                 .join(winners, F.col("url_norm") == F.col("_w"))
                 .select("sha1", "content")
             )
-            pending.append((new_blobs, "content_blobs"))
+            rnd.sink(new_blobs, "content_blobs")
 
-        # ---- P7 media branch → U5/U6 ----------------------------------
-        err_media = None
-        hashed = None
-        if cfg.media:
-            # pure-JVM magic-byte gate (equivalent to the WHATWG sniff
-            # for these two types) — avoids chaining a python sniff
-            # stage in front of the python media kernels
-            png_sig = F.expr("substring(html, 1, 8)") == F.lit(b"\x89PNG\r\n\x1a\n")
-            jpg_sig = F.expr("substring(html, 1, 3)") == F.lit(b"\xff\xd8\xff")
-            imgs = (
-                gated.filter(F.col("gate") == "ok")
-                .filter(png_sig | jpg_sig)
-                .select(
-                    "url_norm",
-                    F.xxhash64("url_norm", F.lit(r)).alias("content_id"),
-                    "html",
-                    F.when(png_sig, "image/png").otherwise("image/jpeg").alias(
-                        "content_type"
-                    ),
-                )
+    def _media(self, rnd: _Round, gated: DataFrame) -> None:
+        """P7 media branch → U5/U6: perceptual hashes, EXIF and faces
+        of the fetched PNG/JPEG bodies; undecodable ones go to the
+        errors sink."""
+        cfg, r = self.cfg, rnd.r
+        if not cfg.media:
+            return
+        # pure-JVM magic-byte gate (equivalent to the WHATWG sniff
+        # for these two types) — avoids chaining a python sniff
+        # stage in front of the python media kernels
+        png_sig = F.expr("substring(html, 1, 8)") == F.lit(b"\x89PNG\r\n\x1a\n")
+        jpg_sig = F.expr("substring(html, 1, 3)") == F.lit(b"\xff\xd8\xff")
+        imgs = (
+            gated.filter(F.col("gate") == "ok")
+            .filter(png_sig | jpg_sig)
+            .select(
+                "url_norm",
+                F.xxhash64("url_norm", F.lit(r)).alias("content_id"),
+                "html",
+                F.when(png_sig, "image/png").otherwise("image/jpeg").alias(
+                    "content_type"
+                ),
             )
-            hashed = imgs.withColumn("ph", phash_udf("html", "content_type")).withColumn(
-                "ex", exif_udf("html")
-            ).select("url_norm", "content_id", "ph", "ex").persist(_CACHE)
-            phashes = hashed.filter(F.col("ph.error").isNull()).select(
-                "content_id",
-                F.col("ph.ahash").alias("ahash"),
-                F.col("ph.dhash").alias("dhash"),
-                F.col("ph.phash").alias("phash"),
+        )
+        hashed = rnd.persist(
+            imgs.withColumn("ph", phash_udf("html", "content_type"))
+            .withColumn("ex", exif_udf("html"))
+            .select("url_norm", "content_id", "ph", "ex")
+        )
+        phashes = hashed.filter(F.col("ph.error").isNull()).select(
+            "content_id",
+            F.col("ph.ahash").alias("ahash"),
+            F.col("ph.dhash").alias("dhash"),
+            F.col("ph.phash").alias("phash"),
+        )
+        rnd.sink(phashes, "perceptual_hashes")
+        exifs = hashed.filter(F.col("ex.present")).select(
+            "content_id",
+            F.col("ex.camera").alias("camera"),
+            F.col("ex.ts").alias("ts"),
+            F.col("ex.lat").alias("lat"),
+            F.col("ex.long").alias("long"),
+        )
+        rnd.sink(exifs, "exif_info")
+        rnd.errors.append(
+            _error_rows(
+                hashed.filter(F.col("ph.error").isNotNull()), r,
+                schemas.ERROR_CODES["ErrorPerceptualHash"], F.col("ph.error"),
             )
-            pending.append((phashes, "perceptual_hashes"))
-            exifs = hashed.filter(F.col("ex.present")).select(
-                "content_id",
-                F.col("ex.camera").alias("camera"),
-                F.col("ex.ts").alias("ts"),
-                F.col("ex.lat").alias("lat"),
-                F.col("ex.long").alias("long"),
+        )
+        # S11 faces sink: one row per detected face per image
+        # (reference html.go:146-159 → faceRecognition.go:13-19,
+        # Face table DDL database.go:134). Detector is pluggable
+        # (no model ships with the package — see media/faces.py).
+        if cfg.face_detector != "none":
+            from ..media.faces import detect_faces
+
+            faces = detect_faces(
+                imgs, body_col="html", id_col="content_id",
+                detector=cfg.face_detector,
             )
-            pending.append((exifs, "exif_info"))
-            err_media = hashed.filter(F.col("ph.error").isNotNull()).select(
-                F.lit(r).alias("round"),
-                F.col("url_norm").alias("url"),
-                F.lit(schemas.ERROR_CODES["ErrorPerceptualHash"]).cast("int").alias("error_code"),
-                F.col("ph.error").alias("error_text"),
-            )
-            # S11 faces sink: one row per detected face per image
-            # (reference html.go:146-159 → faceRecognition.go:13-19,
-            # Face table DDL database.go:134). Detector is pluggable
-            # (no model ships in this sandbox — see media/faces.py).
-            if cfg.face_detector != "none":
-                from ..media.faces import detect_faces
+            rnd.sink(faces, "faces")
 
-                faces = detect_faces(
-                    imgs, body_col="html", id_col="content_id",
-                    detector=cfg.face_detector,
-                )
-                pending.append((faces, "faces"))
+    def _ingest_robots(self, rnd: _Round, gated: DataFrame) -> DataFrame | None:
+        """Robots self-ingestion (north_rule): rules parsed out of the
+        robots.txt bodies fetched THIS round, sunk for the next rounds
+        and returned for this round's own candidates (a newly
+        discovered host's robots is prefetched at PRIORITY_ROBOTS, so
+        its rules usually land with or before the host's first content
+        pages)."""
+        rnd.stats["robots"] = None
+        if not self.cfg.fetch_robots_txt:
+            return None
+        from ..functions.robots import robots_rules as parse_robots
 
-        # ---- robots self-ingestion (north_rule): parse rules out of
-        # robots.txt bodies fetched THIS round; they are sunk for the
-        # next rounds AND applied to this round's own candidates below
-        # (a newly discovered host's robots is prefetched at
-        # PRIORITY_ROBOTS, so its rules usually land with or before
-        # the host's first content pages).
-        round_robots = None
-        if cfg.fetch_robots_txt:
-            from ..functions.robots import robots_rules as parse_robots
+        robots_bodies = gated.filter(
+            (F.col("gate") == "ok")
+            & (path_expr("url_norm") == "/robots.txt")
+        ).select("host", "html")
+        rules = rnd.persist(
+            parse_robots(robots_bodies, host_col="host", body_col="html", round_col=rnd.r)
+        )
+        rnd.sink(rules, "robots")
+        # rules-table snapshot pointer (the cross-round view is the
+        # union of these sinks)
+        rnd.stats["robots"] = f"r{rnd.r:05d}/robots"
+        return rules
 
-            robots_bodies = gated.filter(
-                (F.col("gate") == "ok")
-                & (path_expr("url_norm") == "/robots.txt")
-            ).select("host", "html")
-            round_robots = parse_robots(
-                robots_bodies, host_col="host", body_col="html", round_col=r
-            ).persist(_CACHE)
-            pending.append((round_robots, "robots"))
-
-        # ---- P5/P6 + U1: the flat link/keyword rows are the kind=1
-        # slice of the fused pass above (one row per keyword,
-        # all-scalar Arrow transfer; links/keywords are shuffle-free
-        # filters of the same checkpointed frame). The P5 html-sniff
-        # gate and P6's image-suffix skip both run INSIDE the kernel —
-        # still exactly one Python stage per round.
+    def _rate(self, rnd: _Round, combined: DataFrame) -> DataFrame:
+        """P5/P6 + U1 → J5+A1 rating → P1/P2 priority: one row per
+        extracted link, with its rating and priority; sinks the link
+        keywords and link relations."""
+        r = rnd.r
+        # The flat link/keyword rows are the kind=1 slice of the fused
+        # pass (one row per keyword, all-scalar Arrow transfer;
+        # links/keywords are shuffle-free filters of the same
+        # checkpointed frame). The P5 html-sniff gate and P6's
+        # image-suffix skip both run INSIDE the kernel — still exactly
+        # one Python stage per round.
         # NOTE: case-SENSITIVE suffix skip — html.go:169 uses
         # strings.HasSuffix on the raw URL (only the priority rule at
         # crawling.go:20 lowercases first).
@@ -952,11 +963,10 @@ class CrawlEngine:
                 F.xxhash64("origin_url", "dest_url", "pos", F.lit(r)),
             )
         )
-
         keywords = flat.filter(F.col("kw_idx").isNotNull()).select(
             "link_id", "visibility", "text"
         )
-        pending.append((keywords, "link_keywords"))
+        rnd.sink(keywords, "link_keywords")
 
         if len(self.flagged_rows) <= 512:
             # FUSED rating (r6): one hash aggregate over the flat frame
@@ -985,8 +995,7 @@ class CrawlEngine:
             rated = links.join(ratings, "link_id", "left").withColumn(
                 "rating", F.coalesce(F.col("rating"), F.lit(0.0))
             )
-        rated = ops.with_link_priority(rated).persist(_CACHE)
-
+        rated = rnd.persist(ops.with_link_priority(rated))
         link_rels = rated.select(
             F.lit(r).alias("round"),
             "link_id",
@@ -997,9 +1006,15 @@ class CrawlEngine:
             "rating",
             "time_found",
         )
-        pending.append((link_rels, "link_rels"))
+        rnd.sink(link_rels, "link_rels")
+        return rated
 
-        # ---- candidates: A5/A6 collapse → robots → J2 seen check ------
+    def _candidates(
+        self, rnd: _Round, rated: DataFrame, rules: DataFrame | None,
+        seen_dfs: list[DataFrame],
+    ) -> DataFrame:
+        """A5/A6 collapse → robots filter → J2 seen check: the urls new
+        to the seen set."""
         cands = rated.select(
             F.col("dest_url").alias("url_norm"),
             "priority",
@@ -1010,76 +1025,43 @@ class CrawlEngine:
             .withColumn("host", host_expr("url_norm"))
             .withColumn("url_hash", F.xxhash64("url_norm"))
         )
-        robots_eff = robots_rules_df
-        if round_robots is not None:
-            fresh = round_robots.withColumn("_src", F.lit(1))
-            robots_eff = self._latest_per_host(
-                fresh
-                if robots_eff is None
-                else robots_eff.withColumn("_src", F.lit(0)).unionByName(fresh)
-            )
-        if robots_eff is not None:
-            cands = ops.robots_filter(cands, robots_eff)
-        if cfg.fetch_robots_txt:
+        if rules is not None:
+            cands = ops.robots_filter(cands, rules)
+        if self.cfg.fetch_robots_txt:
             # prefetch robots.txt for every host seen among candidates
             # (added AFTER the filter — robots.txt itself is always
             # fetchable per RFC 9309); the seen check dedups across
             # rounds so each host's robots is fetched once.
-            rob_c = (
-                cands.groupBy("host")
-                .agg(
-                    F.max(protocol_expr("url_norm")).alias("_scheme"),
-                    F.min("depth").alias("depth"),
-                )
-                .filter(F.length("_scheme") > 0)
-                .select(
-                    F.concat(
-                        F.col("_scheme"),
-                        F.lit("://"),
-                        F.col("host"),
-                        F.lit("/robots.txt"),
-                    ).alias("url_norm"),
-                    F.lit(ops.PRIORITY_ROBOTS).alias("priority"),
-                    "depth",
-                    "host",
-                )
-                .withColumn("url_hash", F.xxhash64("url_norm"))
-            )
-            cands = cands.unionByName(rob_c)
+            cands = cands.unionByName(_robots_txt_rows(cands))
 
-        probed = None
-        if cfg.bloom_prefilter and prev["stats"].get("bloom"):
-            shards = self.spark.read.schema(schemas.BLOOM_SHARDS).parquet(
-                os.path.join(self.state.root, "rounds", prev["stats"]["bloom"])
+        if not (self.cfg.bloom_prefilter and rnd.prev.get("bloom")):
+            return rnd.persist(ops.seen_anti_join_parts(cands, seen_dfs))
+        probed = rnd.persist(
+            bloom_ops.probe_shards(
+                cands, self._read_shards(rnd.prev["bloom"]), rnd.n_buckets
             )
-            probed = bloom_ops.probe_shards(
-                cands, shards, n_buckets, cfg.shard_bits
-            ).persist(_CACHE)
-            negatives = probed.filter(~F.col("maybe_seen")).drop("maybe_seen", "bucket")
-            positives = probed.filter(F.col("maybe_seen")).drop("maybe_seen", "bucket")
-            # exact check for bloom-positives only: co-partitioned
-            # anti-joins against the bucketed seen parts — the seen
-            # side is never shuffled OR broadcast-collected (in steady
-            # state positives ≈ the whole candidate set, so the old
-            # broadcast-the-positives shortcut was an OOM at scale).
-            new_from_pos = ops.seen_anti_join_parts(positives, seen_dfs)
-            new = negatives.unionByName(new_from_pos).persist(_CACHE)
-        else:
-            new = ops.seen_anti_join_parts(cands, seen_dfs).persist(_CACHE)
+        )
+        negatives = probed.filter(~F.col("maybe_seen")).drop("maybe_seen", "bucket")
+        positives = probed.filter(F.col("maybe_seen")).drop("maybe_seen", "bucket")
+        # exact check for bloom-positives only: co-partitioned
+        # anti-joins against the bucketed seen parts — the seen
+        # side is never shuffled OR broadcast-collected (in steady
+        # state positives ≈ the whole candidate set, so the old
+        # broadcast-the-positives shortcut was an OOM at scale).
+        new_from_pos = ops.seen_anti_join_parts(positives, seen_dfs)
+        return rnd.persist(negatives.unionByName(new_from_pos))
 
+    def _state_writes(
+        self, rnd: _Round, new: DataFrame, frontier: DataFrame,
+        batch_use: DataFrame, seen_dfs: list[DataFrame],
+    ) -> DataFrame:
+        """Seen, frontier and bloom state for the next round; returns
+        the new frontier rows."""
+        cfg, r, prev = self.cfg, rnd.r, rnd.prev
         seen_delta = new.select("url_norm", "url_hash", F.lit(r).alias("round_seen"))
-
-        # compaction: every N rounds rewrite one merged seen table
-        if compact:
-            merged = seen_delta
-            for d in seen_dfs:
-                merged = merged.unionByName(d)
-            pending.append((merged, "seen_full"))
-            new_seen_parts = [f"r{r:05d}/seen_full"]
-        else:
-            pending.append((seen_delta, "seen_delta"))
-            new_seen_parts = seen_parts + [f"r{r:05d}/seen_delta"]
-
+        rnd.stats["seen_parts"], seen_rows = self._compact_or_append(
+            rnd, "seen_full", "seen_delta", seen_delta, prev["seen_parts"], seen_dfs
+        )
         new_frontier = new.filter(F.col("priority") > 0).select(
             "url_norm",
             "host",
@@ -1095,179 +1077,119 @@ class CrawlEngine:
         # folded in) on the seen-compaction cadence.
         # held rows (robots-first hold-back) are NOT in batch_use: they
         # survive both the full-rewrite anti-join and the tombstones.
-        if compact:
+        if rnd.compact:
             rest = frontier.join(
                 batch_use.select("url_hash"), "url_hash", "left_anti"
             )
-            pending.append((rest.unionByName(new_frontier), "frontier_full"))
-            new_frontier_parts = [f"r{r:05d}/frontier_full"]
-            new_drained_parts: list[str] = []
+            rnd.sink(rest.unionByName(new_frontier), "frontier_full", "url_hash")
+            rnd.stats["frontier_parts"] = [f"r{r:05d}/frontier_full"]
+            rnd.stats["drained_parts"] = []
         else:
-            pending.append((new_frontier, "frontier_delta"))
-            drained_delta = batch_use.select(
-                "url_hash", F.lit(r).alias("drained_round")
-            )
-            pending.append((drained_delta, "drained"))
-            new_frontier_parts = frontier_parts + [f"r{r:05d}/frontier_delta"]
-            new_drained_parts = drained_parts + [f"r{r:05d}/drained"]
+            rnd.sink(new_frontier, "frontier_delta", "url_hash")
+            drained = batch_use.select("url_hash", F.lit(r).alias("drained_round"))
+            rnd.sink(drained, "drained", "url_hash")
+            rnd.stats["frontier_parts"] = prev["frontier_parts"] + [
+                f"r{r:05d}/frontier_delta"
+            ]
+            rnd.stats["drained_parts"] = prev.get("drained_parts", []) + [
+                f"r{r:05d}/drained"
+            ]
 
-        # ---- U8: bloom shard merge ------------------------------------
-        bloom_rel = None
+        # U8: bloom shard merge
+        rnd.stats["bloom"] = None
         if cfg.bloom_prefilter:
-            if out_buckets == n_buckets:
-                old_shards = self.spark.read.schema(schemas.BLOOM_SHARDS).parquet(
-                    os.path.join(self.state.root, "rounds", prev["stats"]["bloom"])
-                )
-                shards2 = bloom_ops.build_shards(
-                    new.select("url_norm"), n_buckets, cfg.shard_bits, old_shards
+            if rnd.out_buckets == rnd.n_buckets:
+                shards = bloom_ops.build_shards(
+                    new.select("url_norm"), rnd.n_buckets, cfg.shard_bits,
+                    self._read_shards(prev["bloom"]),
                 )
             else:
                 # resharded: the old shards are keyed by the old count,
                 # so every shard is rebuilt from the merged seen set
-                shards2 = bloom_ops.build_shards(
-                    merged.select("url_norm"), out_buckets, cfg.shard_bits
+                shards = bloom_ops.build_shards(
+                    seen_rows.select("url_norm"), rnd.out_buckets, cfg.shard_bits
                 )
-            pending.append((shards2, "bloom"))
-            bloom_rel = f"r{r:05d}/bloom"
+            rnd.sink(shards, "bloom")
+            rnd.stats["bloom"] = f"r{r:05d}/bloom"
+        return new_frontier
 
-        # ---- errors / metrics / stats ----------------------------------
-        errors = err_gate
-        if err_media is not None:
-            errors = errors.unionByName(err_media)
-        if err_robots is not None:
-            errors = errors.unionByName(err_robots)
-        pending.append((errors, "errors"))
-
-        if cfg.lineage_metrics:
-            lineage = self._lineage(
-                {
-                    "batch": (batch, F.length("url_norm")),
-                    "fetched_ok": (ok, F.col("size")),
-                    "links": (rated, F.length("dest_url")),
-                    "new_seen": (new, F.length("url_norm")),
-                },
-                r,
-            )
-            pending.append((lineage, "metrics"))
-
-        # ---- flush all sink writes concurrently (persisted parents are
-        # materialized once under the cache's per-partition locks; the
-        # scheduler overlaps the jobs, hiding per-job launch latency).
+    def _flush(self, rnd: _Round) -> None:
+        """Run every pending sink write concurrently: persisted parents
+        are materialized once under the cache's per-partition locks,
+        and the scheduler overlaps the jobs, hiding per-job launch
+        latency (a dozen sequential ~0.5s jobs/round would otherwise
+        dominate small rounds)."""
         from concurrent.futures import ThreadPoolExecutor
 
-        t_preflush = time.monotonic()
-        bucketed_names = {
-            "frontier_full",
-            "frontier_delta",
-            "drained",
-            "seen_delta",
-            "seen_full",
-        }
+        def write(sink: tuple[DataFrame, str, str | None]) -> None:
+            df, name, bucket_col = sink
+            with rnd.sink_job(name):
+                if bucket_col is None:
+                    self._write(df, rnd.r, name)
+                else:
+                    self.state.write_bucketed(
+                        df, rnd.r, name, rnd.out_buckets, bucket_col=bucket_col
+                    )
 
-        sink_ms: dict[str, int] = {}
+        rnd.mark("pre_flush")
+        with ThreadPoolExecutor(max_workers=WRITE_THREADS) as pool:
+            list(pool.map(write, rnd.pending))
+        rnd.mark("flush")
 
-        def _flush(t):
-            df, name = t
-            # job description is thread-local — each concurrent sink
-            # write is labelled in the UI/event log (guide §1.5)
-            self.spark.sparkContext.setJobDescription(f"r{r:05d}:sink:{name}")
-            ts = time.monotonic()
-            if name == "sites_keys":
-                self.state.write_bucketed(
-                    df, r, name, out_buckets, bucket_col="site_id"
-                )
-            elif name in bucketed_names:
-                self.state.write_bucketed(df, r, name, out_buckets)
-            else:
-                self._write(df, r, name)
-            sink_ms[name] = int((time.monotonic() - ts) * 1000)
-
-        # 12 concurrent writer threads: the dozen per-round sink jobs
-        # are individually tiny, so at 6 threads the flush ran two
-        # serial waves whose second wave was latency, not throughput
-        # (the scheduler overlaps all jobs fine; measured r6).
-        with ThreadPoolExecutor(max_workers=int(cfg.extra.get("write_threads", 12))) as pool:
-            list(pool.map(_flush, pending))
-        t_flush = time.monotonic()
-
-        # Round counters: ONE post-flush aggregation job over the (now
-        # materialized) cached frames — replaces the four standalone
-        # count jobs the round used to run before flushing.
+    def _commit(self, rnd: _Round, new_frontier: DataFrame) -> dict:
+        """Round counters, the round_stats row and the atomic manifest
+        commit; then state GC on a compaction round and the release of
+        the round's cached frames."""
+        cfg, r, state = self.cfg, rnd.r, self.state
         # Round counters from the parquet FOOTERS of the sinks just
-        # written (each sink is 1:1 with the frame the old counter job
-        # counted: contents=ok, link_rels=rated, errors, frontier_delta
-        # =new frontier rows) — no Spark job, no cache re-scan. The one
-        # count not derivable from a sink (new-frontier rows folded
-        # into a compaction's full rewrite) runs as a single cached-
-        # scan job on compaction rounds only.
-        pages_fetched = self.state.sink_rows(r, "contents")
-        links_found = self.state.sink_rows(r, "link_rels")
-        n_errors = self.state.sink_rows(r, "errors")
-        bytes_ok = (
-            self.state.sink_column_sum(r, "contents", "size")
-            if pages_fetched
-            else 0
-        )
-        if compact:
-            self.spark.sparkContext.setJobDescription(f"r{r:05d}:counters")
+        # written (each sink is 1:1 with the frame it counts:
+        # contents=ok pages, link_rels=rated links, errors,
+        # frontier_delta=new frontier rows) — no Spark job, no cache
+        # re-scan. The one count not derivable from a sink (new-frontier
+        # rows folded into a compaction's full rewrite) runs as a single
+        # cached-scan job on compaction rounds only.
+        pages_fetched = state.sink_rows(r, "contents")
+        links_found = state.sink_rows(r, "link_rels")
+        n_errors = state.sink_rows(r, "errors")
+        bytes_ok = state.sink_column_sum(r, "contents", "size") if pages_fetched else 0
+        if rnd.compact:
+            rnd.label("counters")
             n_new_frontier = new_frontier.count()
         else:
-            n_new_frontier = self.state.sink_rows(r, "frontier_delta")
-
-        wall_ms = int((time.monotonic() - t0) * 1000)
+            n_new_frontier = state.sink_rows(r, "frontier_delta")
+        rnd.mark("counters")
+        wall_ms = rnd.ms("start", "counters")
         stats = {
-            "frontier_parts": new_frontier_parts,
-            "drained_parts": new_drained_parts,
-            "sites_parts": new_sites_parts,
-            "seen_parts": new_seen_parts,
-            # rules-table snapshot pointer: robots rules fetched this
-            # round (the cross-round view is the union of these sinks)
-            "robots": f"r{r:05d}/robots" if round_robots is not None else None,
-            "bloom": bloom_rel,
+            **rnd.stats,
             "pages_fetched": pages_fetched,
             "links_found": links_found,
             "new_frontier": n_new_frontier,
             "errors": n_errors,
-            "batch": n_batch,
             "wall_ms": wall_ms,
-            "n_buckets": out_buckets,
+            "n_buckets": rnd.out_buckets,
             # feedback for next round's data-proportional shuffle sizing
             "avg_page_bytes": round(bytes_ok / pages_fetched, 1)
             if pages_fetched
             else float(cfg.est_page_bytes),
-            "shuffle_partitions": shuffle_parts,
+            "sink_ms": rnd.sink_ms,
+            "phase_ms": {
+                "pre_flush": rnd.ms("start", "pre_flush"),
+                "flush": rnd.ms("pre_flush", "flush"),
+                "counters": rnd.ms("flush", "counters"),
+            },
         }
-        t_counters = time.monotonic()
-        self.spark.sparkContext.setJobDescription(None)
+        rnd.label(None)
         # round_stats is ONE driver-known row — writing it through a
         # Spark job cost a full job launch per round; pyarrow writes
         # the identical parquet schema directly (readers are unchanged:
         # schema'd parquet scans over the sink glob).
-        self.state.write_round_stats(
+        state.write_round_stats(
             r, pages_fetched, links_found, n_new_frontier, n_errors, wall_ms
         )
-        if cfg.extra.get("phase_timings"):
-            stats["sink_ms"] = sink_ms
-            stats["phase_ms"] = {
-                "pre_flush": int((t_preflush - t0) * 1000),
-                "flush": int((t_flush - t_preflush) * 1000),
-                "counters": int((t_counters - t_flush) * 1000),
-            }
-        self.state.commit_round(r, stats)
-        if cfg.gc_state and compact:
-            stats["gc_removed"] = len(
-                self.state.gc_state(r, keep_rounds=1, spark=self.spark)
-            )
-
-        # batch/combined are localCheckpoint'd (not persisted) — their
-        # blocks are released by the ContextCleaner when the round's
-        # references drop
-        unpersist = [meta, rated, new, hashed, probed, round_robots]
-        if cfg.cache_fat:
-            unpersist.append(gated)
-        for df in unpersist:
-            if df is not None:
-                df.unpersist()
+        state.commit_round(r, stats)
+        if cfg.gc_state and rnd.compact:
+            stats["gc_removed"] = len(state.gc_state(r, keep_rounds=1, spark=self.spark))
+        rnd.release()
         stats["done"] = False
         stats["round"] = r
         return stats
@@ -1293,3 +1215,94 @@ class CrawlEngine:
                 break
             r += 1
         return all_stats
+
+
+@dataclass
+class _Round:
+    """What one round's stages hand each other, and the one place a
+    round labels its Spark jobs (``rNNNNN:<phase>``), takes its phase
+    timestamps and persists frames (all released at commit)."""
+
+    spark: SparkSession
+    r: int
+    prev: dict  # the previous manifest's stats
+    n_buckets: int  # the count every bucketed read and the bloom probe use
+    out_buckets: int  # the count this round's bucketed sinks are written at
+    compact: bool
+    broadcast: bool = True  # the batch is small enough to broadcast
+    stats: dict = field(default_factory=dict)  # manifest entries set by stages
+    # (frame, sink name, bucket column or None for a plain parquet sink)
+    pending: list[tuple[DataFrame, str, str | None]] = field(default_factory=list)
+    errors: list[DataFrame] = field(default_factory=list)
+    cached: list[DataFrame] = field(default_factory=list)
+    marks: dict[str, float] = field(default_factory=lambda: {"start": time.monotonic()})
+    sink_ms: dict[str, int] = field(default_factory=dict)
+
+    def label(self, phase: str | None) -> None:
+        # job descriptions are thread-local: each concurrent sink write
+        # is labelled in the UI/event log (guide §1.5)
+        self.spark.sparkContext.setJobDescription(phase and f"r{self.r:05d}:{phase}")
+
+    def mark(self, phase: str) -> None:
+        self.marks[phase] = time.monotonic()
+
+    def ms(self, since: str, until: str) -> int:
+        return int((self.marks[until] - self.marks[since]) * 1000)
+
+    @contextmanager
+    def sink_job(self, name: str):
+        self.label(f"sink:{name}")
+        ts = time.monotonic()
+        yield
+        self.sink_ms[name] = int((time.monotonic() - ts) * 1000)
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        self.cached.append(df)
+        return df.persist(_CACHE)
+
+    def release(self) -> None:
+        for df in self.cached:
+            df.unpersist()
+
+    def sink(self, df: DataFrame, name: str, bucket_col: str | None = None) -> None:
+        self.pending.append((df, name, bucket_col))
+
+
+def _union(dfs: list[DataFrame | None]) -> DataFrame:
+    """unionByName over the frames given, left to right, skipping None."""
+    return functools.reduce(
+        lambda a, b: a.unionByName(b), [df for df in dfs if df is not None]
+    )
+
+
+def _error_rows(df: DataFrame, r: int, code, text) -> DataFrame:
+    """Errors-sink rows for ``df``'s urls; ``code`` and ``text`` are
+    literals or columns."""
+    return df.select(
+        F.lit(r).alias("round"),
+        F.col("url_norm").alias("url"),
+        F.lit(code).cast("int").alias("error_code"),
+        F.lit(text).alias("error_text"),
+    )
+
+
+def _robots_txt_rows(df: DataFrame) -> DataFrame:
+    """One <scheme>://<host>/robots.txt frontier row per host of ``df``
+    at PRIORITY_ROBOTS and the host's lowest depth there."""
+    return (
+        df.groupBy("host")
+        .agg(
+            F.max(protocol_expr("url_norm")).alias("_scheme"),
+            F.min("depth").alias("depth"),
+        )
+        .filter(F.length("_scheme") > 0)
+        .select(
+            F.concat(
+                F.col("_scheme"), F.lit("://"), F.col("host"), F.lit("/robots.txt")
+            ).alias("url_norm"),
+            F.lit(ops.PRIORITY_ROBOTS).alias("priority"),
+            "depth",
+            "host",
+        )
+        .withColumn("url_hash", F.xxhash64("url_norm"))
+    )

@@ -263,6 +263,20 @@ def test_lineage_metrics_written(spark, run_pair):
     assert agg["fetched_ok"][0] > 0  # real payload sizes summed
 
 
+def test_round_stats_carry_timings(run_pair):
+    """Phase and sink timings are recorded on every round with no
+    option set: the three phases, and one sink entry per table the
+    round wrote (every table in the manifest but round_stats)."""
+    eng, stats, _, _ = run_pair
+    for s in stats:
+        if s.get("done"):
+            continue
+        assert set(s["phase_ms"]) == {"pre_flush", "flush", "counters"}
+        assert all(v >= 0 for v in s["phase_ms"].values())
+        tables = set(eng.state.manifest(s["round"])["tables"]) - {"round_stats"}
+        assert set(s["sink_ms"]) == tables, s["round"]
+
+
 def test_resume_identical_to_uninterrupted(spark, corpus, corpus_dir, tmp_path_factory):
     """Kill after round 2 (simulate an uncommitted round 3), resume,
     and assert final state matches an uninterrupted run."""

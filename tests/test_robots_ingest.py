@@ -12,6 +12,7 @@ from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from notjusthtml_searchengine_spark import schemas
@@ -176,3 +177,68 @@ def test_robots_first_holdback_and_drain_backstop(spark, tmp_path):
         F.col("url") == f"{B}/robots.txt"
     ).count()
     assert n_robots_fetches == 1
+
+
+@pytest.mark.parametrize("bloom", [True, False], ids=["bloom", "exact"])
+def test_bootstrap_robots_rows_in_bloom(spark, tmp_path, bloom):
+    """The seed host's robots.txt enters seen at bootstrap, and the
+    bootstrap bloom holds it: a bloom negative would skip the exact
+    seen check, re-enqueue robots.txt when its host shows up among
+    candidates, and hold that host's next page back one round. Both
+    settings fetch robots.txt once and the chain one page a round."""
+    pages = {
+        f"{A}/robots.txt": "User-agent: *\nDisallow: /private\n",
+        f"{A}/": '<html><body><a href="/x">zebra zebra</a></body></html>',
+        f"{A}/x": '<html><body><a href="/y">zebra zebra</a></body></html>',
+        f"{A}/y": "<html><body><p>end</p></body></html>",
+    }
+    urls = list(pages)
+    d = tmp_path / "corpus"
+    d.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "url": urls,
+                "warc_ts": pa.array([TS] * len(urls), pa.timestamp("us", tz="UTC")),
+                "html": pa.array([pages[u].encode() for u in urls], pa.binary()),
+                "text": [""] * len(urls),
+                "lang": ["en"] * len(urls),
+            }
+        ),
+        str(d / "pages.parquet"),
+    )
+    (d / "seeds.txt").write_text(f"{A}/\n")
+    (d / "flagged.csv").write_text("zebra,11\n")
+    eng = CrawlEngine(
+        spark,
+        pages_path=str(d / "pages.parquet"),
+        seeds_path=str(d / "seeds.txt"),
+        flagged_path=str(d / "flagged.csv"),
+        robots_path=None,
+        cfg=CrawlConfig(
+            state_dir=str(tmp_path / "state"),
+            n_buckets=4,
+            shard_bits=1 << 12,
+            bloom_prefilter=bloom,
+            media=False,
+            fetch_robots_txt=True,
+        ),
+    )
+    stats = eng.run(max_rounds=8)
+
+    fetched = []
+    for s in stats:
+        if s.get("done"):
+            continue
+        r = s["round"]
+        contents = spark.read.schema(schemas.CONTENTS).parquet(
+            eng.state.table_path(r, "contents")
+        )
+        errors = spark.read.schema(schemas.ERRORS).parquet(
+            eng.state.table_path(r, "errors")
+        )
+        fetched.append(
+            {row["url"] for row in contents.select("url").collect()}
+            | {row["url"] for row in errors.select("url").collect()}
+        )
+    assert fetched == [{f"{A}/robots.txt"}, {f"{A}/"}, {f"{A}/x"}, {f"{A}/y"}]

@@ -103,6 +103,31 @@ def test_resume_with_different_bucket_count(spark, polite_corpus, tmp_path):
     assert [_buckets(resumed, r) for r in range(7)] == [8] * 7
 
 
+def test_resume_with_different_shard_bits(spark, polite_corpus, tmp_path):
+    """Three rounds with 2^16-bit bloom shards, then a new engine
+    configured for 2^10 resumes for three more. The stored shards keep
+    their width: probes and merges read it from the shard, so every
+    seen url still probes positive and the crawl stays equal to the
+    simulator."""
+    corpus, corpus_dir = polite_corpus
+    first = _mk_engine(
+        spark, corpus_dir, tmp_path, per_host_budget=8, n_buckets=8,
+        shard_bits=1 << 16,
+    )
+    first.run(max_rounds=3)
+    resumed = _mk_engine(
+        spark, corpus_dir, tmp_path, per_host_budget=8, n_buckets=8,
+        shard_bits=1 << 10,
+    )
+    stats = resumed.run(max_rounds=3)
+    assert [s["round"] for s in stats] == [4, 5, 6]
+
+    sim = Simulator(corpus, per_host_budget=8).run(max_rounds=6)
+    for r in range(1, 7):
+        assert _fetched(spark, resumed, r) == sim.fetched_per_round[r - 1], f"round {r}"
+    assert _seen(resumed, 6) == sim.seen
+
+
 def test_reshard_at_compaction(spark, corpus, corpus_dir, tmp_path):
     """A tiny target partition size makes the derived count grow with
     the state; it changes only at compaction rounds, the crawl stays
@@ -138,6 +163,6 @@ def test_reshard_at_compaction(spark, corpus, corpus_dir, tmp_path):
         os.path.join(eng.state.root, "rounds", m["bloom"])
     )
     seen = eng._read_seen(m["seen_parts"]).select("url_norm")
-    probed = bloom_ops.probe_shards(seen, shards, m["n_buckets"], 1 << 16)
+    probed = bloom_ops.probe_shards(seen, shards, m["n_buckets"])
     assert probed.count() == len(sim.seen)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
